@@ -154,8 +154,33 @@ EXTRAS = [
 HEADLINE = CORE + EXTRAS + CORE_R4
 
 
+def parse_only(env: str) -> set[str] | None:
+    """The measured-set filter from SPARK_GRAFT_BENCH_QUERIES: comma-
+    separated names, whitespace around each ignored; None (the full
+    set) when empty. An unknown name raises ValueError instead of being
+    dropped, since a typo would otherwise report a near-zero total."""
+    only = {s.strip() for s in env.split(",") if s.strip()} or None
+    unknown = sorted((only or set()) - set(HEADLINE) - {"pipeline_watcher"})
+    if unknown:
+        raise ValueError(
+            "SPARK_GRAFT_BENCH_QUERIES names unknown queries: "
+            + ", ".join(unknown)
+        )
+    return only
+
+
 def main() -> None:
     t0 = time.time()
+    # SPARK_GRAFT_BENCH_QUERIES=q_a,q_b restricts the measured set (the
+    # sf1 scaling rung runs the top-10 entries only — r10 VERDICT "Next
+    # round" #3). Unset (the default invocation) = full HEADLINE set,
+    # identical behavior to before. Additions-only: protocol, sinks,
+    # min-of-N unchanged. Parsed before the session starts, so a typo
+    # exits at once.
+    try:
+        only = parse_only(os.environ.get("SPARK_GRAFT_BENCH_QUERIES", ""))
+    except ValueError as e:
+        sys.exit(f"bench.py: {e}")
     from rag_pipelines_spark.registry import load_all
     from rag_pipelines_spark.session import get_spark
 
@@ -174,14 +199,6 @@ def main() -> None:
         "org.apache.spark.sql.execution.window.WindowExec",
         jvm.org.apache.logging.log4j.Level.ERROR,
     )
-    # SPARK_GRAFT_BENCH_QUERIES=q_a,q_b restricts the measured set (the
-    # sf1 scaling rung runs the top-10 entries only — r10 VERDICT "Next
-    # round" #3). Unset (the driver's invocation) = full HEADLINE set,
-    # identical behavior to before. Additions-only: protocol, sinks,
-    # min-of-N unchanged.
-    only_env = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
-    only = {s for s in only_env.split(",") if s} or None
-
     # warm-up: run every headline shape once at the smallest SF so JIT/
     # codegen/parquet-footer costs don't land on the first measured query
     warm_dir = "/root/testdata/sf0.001"

@@ -163,6 +163,8 @@ def merge_bloom(spark, keys_df: DataFrame, state_path: str, *,
         commit_version,
         epoch_already_applied,
         live_version_dir,
+        read_table,
+        write_table,
         writer_lease,
     )
 
@@ -174,7 +176,7 @@ def merge_bloom(spark, keys_df: DataFrame, state_path: str, *,
             return
         live = live_version_dir(state_path, what="bloom state")
         if live is not None:
-            state = spark.read.parquet(live)
+            state = read_table(spark, live)
             got = bloom_state_params(state)
             if got is not None and got != (m_bits, k):
                 raise ValueError(
@@ -196,9 +198,7 @@ def merge_bloom(spark, keys_df: DataFrame, state_path: str, *,
         )
         commit_version(
             state_path,
-            lambda vdir: stamped.coalesce(state_partitions)
-            .write.mode("overwrite")
-            .parquet(vdir),
+            lambda vdir: write_table(stamped, vdir, state_partitions),
             epoch=epoch,
             prev=os.path.basename(live) if live else None,
         )
@@ -208,10 +208,10 @@ def read_bloom_words(spark, state_path: str) -> DataFrame | None:
     """The live (w, bits, m_bits, k) frame, or None if no bloom has
     committed yet. Probe with the STATE's own parameters
     (bloom_state_params), never a caller-remembered value."""
-    from rag_pipelines_spark.operators.state import live_version_dir
+    from rag_pipelines_spark.operators.state import live_version_dir, read_table
 
     live = live_version_dir(state_path, what="bloom state")
-    return None if live is None else spark.read.parquet(live)
+    return None if live is None else read_table(spark, live)
 
 
 def bloom_state_params(words: DataFrame) -> tuple[int, int] | None:

@@ -57,6 +57,8 @@ from rag_pipelines_spark.operators.state import (
     commit_version,
     epoch_already_applied,
     live_version_dir,
+    read_table,
+    write_table,
     writer_lease,
 )
 
@@ -194,7 +196,7 @@ def merge_cm(spark, batch: DataFrame, state_path: str, *,
                     f"width={sw}, merge called with depth={depth} "
                     f"width={width}"
                 )
-            old = spark.read.parquet(os.path.join(live, "counters"))
+            old = read_table(spark, os.path.join(live, "counters"))
             counters = (
                 old.unionByName(b)
                 .groupBy(*keys, "d", "bucket")
@@ -204,9 +206,8 @@ def merge_cm(spark, batch: DataFrame, state_path: str, *,
             counters = b
 
         def _write(vdir: str) -> None:
-            counters.coalesce(state_partitions).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(vdir, "counters"))
+            write_table(counters, os.path.join(vdir, "counters"),
+                        state_partitions)
             # meta = two ints: an atomic backend text file, not a Spark
             # parquet job. History: createDataFrame cost ~6 s/commit,
             # the r9 range()+lit rewrite ~0.5 s — still a whole job for
@@ -232,7 +233,7 @@ def read_cm(spark, state_path: str):
     if live is None:
         raise FileNotFoundError(f"no count-min state at {state_path}")
     return (
-        spark.read.parquet(os.path.join(live, "counters")),
+        read_table(spark, os.path.join(live, "counters")),
         _read_meta(spark, live),
     )
 

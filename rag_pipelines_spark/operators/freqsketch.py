@@ -53,6 +53,8 @@ from rag_pipelines_spark.operators.state import (
     commit_version,
     epoch_already_applied,
     live_version_dir,
+    read_table,
+    write_table,
     writer_lease,
 )
 
@@ -95,15 +97,21 @@ def _join_null_safe(left: DataFrame, right: DataFrame, keys: list[str],
     old plain equi-joins dropped NULL groups' pruning offsets, so
     freq_partial had to exclude them and a NULL-lang doc vanished from
     the frequent-terms state while remaining counted in rollup/HLL).
-    Still a hash-joinable condition (BroadcastHashJoin supports <=>)."""
-    r = right
-    for i, k in enumerate(keys):
-        r = r.withColumnRenamed(k, f"__nk{i}")
+    Still a hash-joinable condition (BroadcastHashJoin supports <=>).
+
+    Keys are referenced through their DataFrames and the right side's
+    dropped in one call, with no renaming: every DataFrame call
+    re-analyses the plan, and on the serve paths (freq_topk,
+    cm_estimate) a per-key rename loop cost 4-17 ms of driver time per
+    request (an aliasing select, which needs both schemas, cost more
+    still). Both sides must come from different sources, as both
+    callers' do (a state table vs. a request frame or a second state
+    table): on a shared lineage ``right[k]`` resolves to the left key."""
     cond = None
-    for i, k in enumerate(keys):
-        c = left[k].eqNullSafe(F.col(f"__nk{i}"))
+    for k in keys:
+        c = left[k].eqNullSafe(right[k])
         cond = c if cond is None else cond & c
-    return left.join(r, cond, how).drop(*[f"__nk{i}" for i in range(len(keys))])
+    return left.join(right, cond, how).drop(*[right[k] for k in keys])
 
 
 def _prune(items: DataFrame, keys: list[str], m: int):
@@ -244,8 +252,8 @@ def merge_freq(spark, batch: DataFrame, state_path: str, *,
             return
         live = live_version_dir(state_path, what="freq-sketch state")
         if live is not None:
-            o_items = spark.read.parquet(os.path.join(live, "items"))
-            o_totals = spark.read.parquet(os.path.join(live, "totals"))
+            o_items = read_table(spark, os.path.join(live, "items"))
+            o_totals = read_table(spark, os.path.join(live, "totals"))
             # materialize the summed union once (state-sized, tiny): the
             # prune consumes it three times (ranked, d, totals-join) and
             # would otherwise re-run the read+union+shuffle per consumer
@@ -295,10 +303,10 @@ def merge_freq(spark, batch: DataFrame, state_path: str, *,
             from rag_pipelines_spark.operators.concurrency import run_all
 
             run_all(
-                lambda: _sized(items, n_parts).write.mode(
-                    "overwrite").parquet(os.path.join(vdir, "items")),
-                lambda: _sized(totals, n_parts).write.mode(
-                    "overwrite").parquet(os.path.join(vdir, "totals")),
+                lambda: write_table(_sized(items, n_parts),
+                                    os.path.join(vdir, "items")),
+                lambda: write_table(_sized(totals, n_parts),
+                                    os.path.join(vdir, "totals")),
             )
 
         commit_version(
@@ -315,8 +323,8 @@ def read_freq(spark, state_path: str):
     if live is None:
         raise FileNotFoundError(f"no freq-sketch state at {state_path}")
     return (
-        spark.read.parquet(os.path.join(live, "items")),
-        spark.read.parquet(os.path.join(live, "totals")),
+        read_table(spark, os.path.join(live, "items")),
+        read_table(spark, os.path.join(live, "totals")),
     )
 
 

@@ -27,6 +27,8 @@ from rag_pipelines_spark.operators.state import (
     commit_version,
     epoch_already_applied,
     live_version_dir,
+    read_table,
+    write_table,
     writer_lease,
 )
 
@@ -66,7 +68,7 @@ def merge_histogram(spark, batch: DataFrame, state_path: str, *,
         live = live_version_dir(state_path, what="histogram state")
         if live is not None:
             partial = (
-                spark.read.parquet(live)
+                read_table(spark, live)
                 .unionByName(partial)
                 .groupBy(*keys, "bin")
                 .agg(F.sum("n").alias("n"))
@@ -74,7 +76,7 @@ def merge_histogram(spark, batch: DataFrame, state_path: str, *,
         merged = partial
         commit_version(
             state_path,
-            lambda vdir: merged.write.mode("overwrite").parquet(vdir),
+            lambda vdir: write_table(merged, vdir),
             epoch=epoch,
             prev=os.path.basename(live) if live else None,
         )
@@ -84,7 +86,7 @@ def read_histogram(spark, state_path: str) -> DataFrame:
     live = live_version_dir(state_path, what="histogram state")
     if live is None:
         raise FileNotFoundError(f"no histogram state at {state_path}")
-    return spark.read.parquet(live)
+    return read_table(spark, live)
 
 
 def histogram_quantile(hist: DataFrame, keys: list[str], width: float,

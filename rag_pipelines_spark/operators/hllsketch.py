@@ -37,6 +37,8 @@ from rag_pipelines_spark.operators.state import (
     commit_version,
     epoch_already_applied,
     live_version_dir,
+    read_table,
+    write_table,
     writer_lease,
 )
 
@@ -102,7 +104,7 @@ def merge_hll(spark, batch: DataFrame, state_path: str, *,
             ).first()
         if live is not None:
             merged = (
-                spark.read.parquet(live)
+                read_table(spark, live)
                 .unionByName(partial)
                 .groupBy(*keys)
                 .agg(F.hll_union_agg(F.col("sketch")).alias("sketch"))
@@ -113,9 +115,7 @@ def merge_hll(spark, batch: DataFrame, state_path: str, *,
         # shuffle-partition-count spray of tiny files re-read every merge)
         commit_version(
             state_path,
-            lambda vdir: merged.coalesce(state_partitions)
-            .write.mode("overwrite")
-            .parquet(vdir),
+            lambda vdir: write_table(merged, vdir, state_partitions),
             epoch=epoch,
             prev=os.path.basename(live) if live else None,
         )
@@ -125,7 +125,7 @@ def read_hll(spark, state_path: str) -> DataFrame:
     live = live_version_dir(state_path, what="hll-sketch state")
     if live is None:
         raise FileNotFoundError(f"no hll-sketch state at {state_path}")
-    return spark.read.parquet(live)
+    return read_table(spark, live)
 
 
 def hll_estimate(state: DataFrame, keys: list[str]) -> DataFrame:

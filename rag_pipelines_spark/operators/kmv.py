@@ -165,6 +165,8 @@ def merge_kmv(spark, batch: DataFrame, state_path: str, *,
         commit_version,
         epoch_already_applied,
         live_version_dir,
+        read_table,
+        write_table,
         writer_lease,
     )
     import os
@@ -179,7 +181,7 @@ def merge_kmv(spark, batch: DataFrame, state_path: str, *,
             return
         live = live_version_dir(state_path, what="kmv-sketch state")
         if live is not None:
-            state = spark.read.parquet(live)
+            state = read_table(spark, live)
             # k travels in-band: a k mismatch would silently corrupt the
             # size<k exact/estimate branch (the full-sketch test reads
             # array length against the CALLER's k) — refuse loudly, the
@@ -195,19 +197,17 @@ def merge_kmv(spark, batch: DataFrame, state_path: str, *,
             merged = partial
         commit_version(
             state_path,
-            lambda vdir: merged.withColumn("k", F.lit(k))
-            .coalesce(state_partitions)
-            .write.mode("overwrite")
-            .parquet(vdir),
+            lambda vdir: write_table(
+                merged.withColumn("k", F.lit(k)), vdir, state_partitions),
             epoch=epoch,
             prev=os.path.basename(live) if live else None,
         )
 
 
 def read_kmv(spark, state_path: str) -> DataFrame:
-    from rag_pipelines_spark.operators.state import live_version_dir
+    from rag_pipelines_spark.operators.state import live_version_dir, read_table
 
     live = live_version_dir(state_path, what="kmv-sketch state")
     if live is None:
         raise FileNotFoundError(f"no kmv-sketch state at {state_path}")
-    return spark.read.parquet(live)
+    return read_table(spark, live)

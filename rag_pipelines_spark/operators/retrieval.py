@@ -263,14 +263,14 @@ def corpus_stats(spark, state_path: str):
     """(terms, totals) DataFrames of the live corpus-stats state."""
     import os
 
-    from rag_pipelines_spark.operators.state import live_version_dir
+    from rag_pipelines_spark.operators.state import live_version_dir, read_table
 
     live = live_version_dir(state_path, what="corpus-stats state")
     if live is None:
         raise FileNotFoundError(f"no corpus-stats state at {state_path}")
     return (
-        spark.read.parquet(os.path.join(live, "terms")),
-        spark.read.parquet(os.path.join(live, "totals")),
+        read_table(spark, os.path.join(live, "terms")),
+        read_table(spark, os.path.join(live, "totals")),
     )
 
 
@@ -296,6 +296,8 @@ def merge_corpus_stats(spark, batch: DataFrame, state_path: str, *,
         commit_version,
         epoch_already_applied,
         live_version_dir,
+        read_table,
+        write_table,
         writer_lease,
     )
 
@@ -311,8 +313,8 @@ def merge_corpus_stats(spark, batch: DataFrame, state_path: str, *,
             return
         live = live_version_dir(state_path, what="corpus-stats state")
         if live is not None:
-            o_terms = spark.read.parquet(os.path.join(live, "terms"))
-            o_totals = spark.read.parquet(os.path.join(live, "totals"))
+            o_terms = read_table(spark, os.path.join(live, "terms"))
+            o_totals = read_table(spark, os.path.join(live, "totals"))
             terms = (
                 o_terms.unionByName(b_terms)
                 .groupBy("term")
@@ -335,10 +337,8 @@ def merge_corpus_stats(spark, batch: DataFrame, state_path: str, *,
             from rag_pipelines_spark.operators.concurrency import run_all
 
             run_all(
-                lambda: terms.write.mode("overwrite").parquet(
-                    os.path.join(vdir, "terms")),
-                lambda: totals.write.mode("overwrite").parquet(
-                    os.path.join(vdir, "totals")),
+                lambda: write_table(terms, os.path.join(vdir, "terms")),
+                lambda: write_table(totals, os.path.join(vdir, "totals")),
             )
 
         commit_version(

@@ -39,6 +39,8 @@ from rag_pipelines_spark.operators.state import (
     commit_version,
     epoch_already_applied,
     live_version_dir,
+    read_table,
+    write_table,
     writer_lease,
 )
 
@@ -123,7 +125,7 @@ def merge_rollup(spark, batch: DataFrame, state_path: str, *,
         live = live_version_dir(state_path, what="rollup state")
         if live is not None:
             merged = (
-                spark.read.parquet(live)
+                read_table(spark, live)
                 .unionByName(partial)
                 .groupBy(*keys)
                 .agg(*_combine_aggs(measures))
@@ -132,7 +134,7 @@ def merge_rollup(spark, batch: DataFrame, state_path: str, *,
             merged = partial
         commit_version(
             state_path,
-            lambda vdir: merged.write.mode("overwrite").parquet(vdir),
+            lambda vdir: write_table(merged, vdir),
             epoch=epoch,
             prev=os.path.basename(live) if live else None,
         )
@@ -142,7 +144,7 @@ def read_rollup(spark, state_path: str) -> DataFrame:
     live = live_version_dir(state_path, what="rollup state")
     if live is None:
         raise FileNotFoundError(f"no rollup state at {state_path}")
-    return spark.read.parquet(live)
+    return read_table(spark, live)
 
 
 def compact_rollup_state(
@@ -194,7 +196,7 @@ def compact_rollup_state(
         live = live_version_dir(state_path, what="rollup state")
         if live is None:
             raise FileNotFoundError(f"no rollup state at {state_path}")
-        state = spark.read.parquet(live)
+        state = read_table(spark, live)
         n_before = state.count()
         if min_count is not None:
             state = state.filter(F.col(count_col) >= min_count)
@@ -209,7 +211,7 @@ def compact_rollup_state(
         epoch = applied_epoch(state_path, what="rollup state")
         commit_version(
             state_path,
-            lambda vdir: compacted.write.mode("overwrite").parquet(vdir),
+            lambda vdir: write_table(compacted, vdir),
             epoch=epoch,
             prev=os.path.basename(live),
         )

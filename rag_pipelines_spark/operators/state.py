@@ -3,8 +3,19 @@ incremental operator that persists small key/stat state between batches
 (near-dup band keys, BM25 corpus statistics).
 
 Layout: ``<state_path>/MANIFEST`` (one line naming the live prefix) plus
-``<state_path>/v-<hex>/`` parquet directories. The live state is named by
-a POINTER FILE, never by directory renames: publishing the one small
+``<state_path>/v-<hex>/`` parquet directories. A version dir holds::
+
+    v-<hex>/
+      part-*.parquet   the state table (or one subdir per table, e.g.
+                       items/ + totals/, each laid out the same way)
+      _schema.json     the table's Spark schema, recorded by write_table
+                       so read_table skips parquet schema inference
+      _epoch           applied micro-batch epoch (write_epoch)
+      _prev            superseded version's name (write_prev)
+
+Spark's readers skip ``_``-prefixed files, so the side files never reach
+a scan. The live state is named by a POINTER FILE, never by directory
+renames: publishing the one small
 manifest is atomic on every supported store (POSIX/HDFS rename; a
 single-key PUT on object stores) — whereas multi-key directory
 "renames" are non-atomic copies. The live path therefore exists at
@@ -308,6 +319,41 @@ def commit_version(state_path: str, write_fn, *, epoch: int | None,
     write_manifest(state_path, version)
     gc_orphans(state_path)  # retains the predecessor for in-flight readers
     return vdir
+
+
+SCHEMA_FILE = "_schema.json"
+
+
+def write_table(df, path: str, parts: int | None = None) -> None:
+    """Write one state table (coalesced to ``parts`` files when given)
+    and record its schema as ``<path>/_schema.json``. Call it inside a
+    commit_version ``write_fn``: the schema then lands in the version
+    dir before the MANIFEST flip, so every live table has one."""
+    if parts is not None:
+        df = df.coalesce(parts)
+    df.write.mode("overwrite").parquet(path)
+    # the frame's own session: callers overlap table writes on worker
+    # threads (concurrency.run_all), which have no active session
+    backend_for(path, df.sparkSession).publish_text(
+        path, SCHEMA_FILE, df.schema.json())
+
+
+def read_table(spark, path: str):
+    """Read a state table written by write_table with its recorded
+    schema. An unrecorded read runs Spark's parquet schema-inference job
+    (one job and ~0.1 s per table, the dominant cost of a KB-sized
+    serve read). Versions committed before schemas were recorded have no
+    ``_schema.json`` and fall back to inference."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    try:
+        recorded = backend_for(path, spark).read_text(
+            os.path.join(path, SCHEMA_FILE))
+    except FileNotFoundError:
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(json.loads(recorded))).parquet(path)
 
 
 def gc_orphans(state_path: str) -> list[str]:

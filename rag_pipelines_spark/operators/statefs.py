@@ -64,12 +64,15 @@ def is_uri(path: str) -> bool:
     return "://" in path
 
 
-def backend_for(path: str):
+def backend_for(path: str, spark=None):
     """Resolve the backend for a state path. Local paths never touch the
-    JVM; URI paths require an active SparkSession (its Hadoop conf holds
-    the credentials and connector config for the scheme)."""
+    JVM; URI paths require a SparkSession (its Hadoop conf holds the
+    credentials and connector config for the scheme): ``spark`` when
+    given, else the thread's active session. Pass ``spark`` from code
+    that may run on a worker thread (operators/concurrency.run_all),
+    where no session is active."""
     if is_uri(path):
-        return HadoopBackend.instance()
+        return HadoopBackend.instance(spark)
     return LocalBackend.instance()
 
 
@@ -234,13 +237,13 @@ class HadoopBackend:
     _inst = None
 
     @classmethod
-    def instance(cls) -> "HadoopBackend":
+    def instance(cls, spark=None) -> "HadoopBackend":
         from pyspark.sql import SparkSession
 
         # cache per live session: a restarted SparkSession means a new
         # JVM gateway, and calls through the old one hang/error — rebuild
         # instead of handing out stale py4j handles
-        active = SparkSession.getActiveSession()
+        active = spark if spark is not None else SparkSession.getActiveSession()
         if cls._inst is None or cls._inst._spark is not active:
             cls._inst = cls(active)
         return cls._inst

@@ -243,7 +243,11 @@ def substring_dedup(
     # id set — zero added corpus shuffle, and the corpus-sized rebuild
     # shrinks to the affected fraction at any scale.
     affected = covered.select("id").distinct()
-    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
+    # NULL text comes back as "" (line_dedup and the SQL oracle agree)
+    src = df.select(
+        F.col(id_col).alias("id"),
+        F.coalesce(F.col(text_col), F.lit("")).alias("_txt"),
+    )
     aff_docs = src.join(affected, "id")
     toks = aff_docs.select(
         "id",

@@ -54,7 +54,12 @@ def get_spark(
         # to partitions whose build side is < 256 MB (with AQE
         # coalescing targeting ~64 MB partitions, an OOM-safe margin);
         # both knobs are env-overridable for cluster postures where
-        # build-side memory is tighter.
+        # build-side memory is tighter. preferSortMergeJoin=false also
+        # reaches the STATIC planner (JoinSelection), where the 256m
+        # AQE bound below does not apply: the initial plan (and every
+        # plan with AQE off) picks SHJ whenever the build side is
+        # estimated at least 3x smaller than the other side and below
+        # autoBroadcastJoinThreshold x shuffle partitions.
         .config(
             "spark.sql.join.preferSortMergeJoin",
             os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
@@ -78,7 +83,7 @@ def get_spark(
         # this is the same knob you point at the fast local SSD array.
         .config(
             "spark.local.dir",
-            os.environ.get("SPARK_LOCAL_DIRS", _scratch_local_dir()),
+            os.environ.get("SPARK_LOCAL_DIRS") or _scratch_local_dir(),
         )
     )
     for k, v in (extra_conf or {}).items():

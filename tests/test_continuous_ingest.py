@@ -19,7 +19,8 @@ from pyspark.sql.types import (
 from rag_pipelines_spark.streaming.incremental import continuous_ingest_pipeline
 
 # Fsync-bound slow partition (tools/slow_tests.txt): deselected by the
-# default `-m "not slow"` addopts; run via tools/run_slow_suite.sh.
+# default `-m "not slow"` addopts, even when this module is named on the
+# command line; run with `-m slow` (tools/run_slow_suite.sh does).
 pytestmark = pytest.mark.slow
 
 SCHEMA = StructType(

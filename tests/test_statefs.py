@@ -12,7 +12,8 @@ import time
 import pytest
 
 # Fsync-bound slow partition (tools/slow_tests.txt): deselected by the
-# default `-m "not slow"` addopts; run via tools/run_slow_suite.sh.
+# default `-m "not slow"` addopts, even when this module is named on the
+# command line; run with `-m slow` (tools/run_slow_suite.sh does).
 pytestmark = pytest.mark.slow
 
 

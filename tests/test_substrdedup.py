@@ -148,6 +148,19 @@ def test_adjacent_spans_merge(spark):
     assert spans == brute_spans(docs, 2, 2)
 
 
+def test_null_text_comes_back_empty(spark):
+    """A NULL document is never affected and returns "" (the SQL oracle
+    and line_dedup coalesce the same way), while the other docs dedup as
+    usual."""
+    docs = [(0, "a b c d"), (1, None), (2, "a b c d")]
+    rows = substring_dedup(
+        spark.createDataFrame(docs, "doc_id long, text string"),
+        "doc_id", "text", n=2, min_count=2,
+    ).collect()
+    assert sorted((r.doc_id, r.clean_text) for r in rows) == [
+        (0, "a b c d"), (1, ""), (2, "")]
+
+
 def test_min_count_three(spark):
     docs = [(0, "a b c"), (1, "a b d"), (2, "a b e")]
     assert _spark_spans(spark, docs, 2, 3) == brute_spans(docs, 2, 3)
