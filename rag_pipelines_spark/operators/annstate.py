@@ -52,7 +52,9 @@ from rag_pipelines_spark.operators.state import (
     live_version_dir,
     mark_epoch_committed,
     max_committed_epoch,
+    read_table,
     write_manifest,
+    write_table,
     writer_lease,
 )
 from rag_pipelines_spark.operators.statefs import backend_for
@@ -100,7 +102,7 @@ def _nearest_cells(frame: DataFrame, seeds: DataFrame, n_cells: int) -> DataFram
 
 
 def _read_seeds(spark, state_path: str) -> DataFrame:
-    return spark.read.parquet(_seeds_dir(state_path)).select(
+    return read_table(spark, _seeds_dir(state_path)).select(
         "seed_id", "sv", "sn2"
     )
 
@@ -140,9 +142,7 @@ def merge_ann_index(
             # seeds BEFORE the manifest: a crash in between leaves a
             # manifest-less root, which live_version_dir reports as fresh
             # (refuse-to-look-empty holds: postings cannot exist yet)
-            seeds.coalesce(1).write.mode("overwrite").parquet(
-                _seeds_dir(state_path)
-            )
+            write_table(seeds, _seeds_dir(state_path), 1)
             version = f"v-{uuid.uuid4().hex[:8]}"
             live = os.path.join(state_path, version)
             backend_for(state_path).makedirs(live)

@@ -40,8 +40,17 @@ An undersized m degrades fpp (less pruning), never correctness.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rag_pipelines_spark.operators.state import (
+    StateFamily,
+    fold,
+    in_band_params,
+    live_params,
+    live_version_dir,
+    read_state,
+)
 
 __all__ = [
     "bloom_build",
@@ -131,8 +140,8 @@ def bloom_anti_join(
 
 
 # ---------------------------------------------------------------------------
-# Accreted bloom state (manifest/epoch/lease contract) — the continuous-
-# ingest front door's prefilter. Word-wise bit_or is commutative,
+# Accreted bloom state (state.fold) — the continuous-ingest front door's
+# prefilter. Word-wise bit_or is commutative,
 # associative and idempotent, so accretion == one-shot bloom EXACTLY and
 # replayed epochs cannot corrupt the bitmap.
 #
@@ -146,76 +155,49 @@ def bloom_anti_join(
 # ---------------------------------------------------------------------------
 
 
+BLOOM = StateFamily("bloom state", mismatch="parameter mismatch (mixed "
+                    "position spaces cause probe false negatives)",
+                    legacy_params=in_band_params("m_bits", "k"))
+
+
 def merge_bloom(spark, keys_df: DataFrame, state_path: str, *,
                 key: str, m_bits: int = 1 << 20, k: int = 5,
                 epoch: int | None = None,
                 state_partitions: int = 1) -> None:
-    """Fold one batch's keys into the accreted (w, bits) bloom state.
+    """Fold one batch's keys into the accreted (w, bits) bloom state
+    (state.fold).
 
-    The state carries its (m_bits, k) in-band; merging with DIFFERENT
-    parameters raises instead of silently mixing position spaces — a
-    mixed bitmap would produce probe FALSE NEGATIVES, i.e. silently
-    admitted duplicates (same posture as hll_union_agg's lgk mismatch).
+    (m_bits, k) are the state's recorded parameters (and stay in-band as
+    columns); merging with DIFFERENT parameters raises instead of
+    silently mixing position spaces — a mixed bitmap would produce probe
+    FALSE NEGATIVES, i.e. silently admitted duplicates.
     """
-    import os
+    def combine(old, p):
+        if old is not None:
+            p = (old[0].select("w", "bits").unionByName(p).groupBy("w")
+                 .agg(F.expr("bit_or(bits)").alias("bits")))
+        return {"": (p.withColumn("m_bits", F.lit(m_bits))
+                      .withColumn("k", F.lit(k)), state_partitions)}
 
-    from rag_pipelines_spark.operators.state import (
-        commit_version,
-        epoch_already_applied,
-        live_version_dir,
-        read_table,
-        write_table,
-        writer_lease,
-    )
-
-    if epoch_already_applied(state_path, "bloom state", epoch):
-        return
-    partial = bloom_build(keys_df.select(key), key, m_bits, k)
-    with writer_lease(state_path, what="bloom state"):
-        if epoch_already_applied(state_path, "bloom state", epoch):
-            return
-        live = live_version_dir(state_path, what="bloom state")
-        if live is not None:
-            state = read_table(spark, live)
-            got = bloom_state_params(state)
-            if got is not None and got != (m_bits, k):
-                raise ValueError(
-                    f"bloom state at {state_path} was built with "
-                    f"(m_bits, k)={got}; refusing to merge with "
-                    f"({m_bits}, {k}) — mixed position spaces cause probe "
-                    "false negatives (silent duplicates)"
-                )
-            merged = (
-                state.select("w", "bits")
-                .unionByName(partial)
-                .groupBy("w")
-                .agg(F.expr("bit_or(bits)").alias("bits"))
-            )
-        else:
-            merged = partial
-        stamped = merged.withColumn("m_bits", F.lit(m_bits)).withColumn(
-            "k", F.lit(k)
-        )
-        commit_version(
-            state_path,
-            lambda vdir: write_table(stamped, vdir, state_partitions),
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    fold(spark, BLOOM, state_path, params={"m_bits": m_bits, "k": k},
+         epoch=epoch,
+         partial=lambda: bloom_build(keys_df.select(key), key, m_bits, k),
+         combine=combine)
 
 
 def read_bloom_words(spark, state_path: str) -> DataFrame | None:
     """The live (w, bits, m_bits, k) frame, or None if no bloom has
     committed yet. Probe with the STATE's own parameters
     (bloom_state_params), never a caller-remembered value."""
-    from rag_pipelines_spark.operators.state import live_version_dir, read_table
+    try:
+        return read_state(spark, BLOOM, state_path)[0]
+    except FileNotFoundError:
+        return None
 
-    live = live_version_dir(state_path, what="bloom state")
-    return None if live is None else read_table(spark, live)
 
-
-def bloom_state_params(words: DataFrame) -> tuple[int, int] | None:
-    """(m_bits, k) the state was built with (constant columns, any row);
-    None for an empty state (zero keys folded — no constraint yet)."""
-    row = words.select("m_bits", "k").first()
-    return None if row is None else (row.m_bits, row.k)
+def bloom_state_params(state_path: str) -> tuple[int, int] | None:
+    """(m_bits, k) the live bloom was built with, or None (no state yet):
+    a text read of its recorded parameters, no Spark job."""
+    live = live_version_dir(state_path, what=BLOOM.what)
+    p = live and live_params(SparkSession.active(), BLOOM, live)
+    return None if p is None else (p["m_bits"], p["k"])

@@ -34,8 +34,8 @@ distinct regime is pinned locally by the error-bound test
 Counts ride decimal(30,0): exact, associative — merge-order invariant
 in the no-prune regime (a double sum would not be).
 
-Manifest/versioned-prefix state + epoch guard + writer lease: identical
-contract to operators/rollup.py (see operators/state.py).
+Manifest/versioned-prefix state + epoch guard + writer lease: folded by
+operators/state.py::fold, with m as the state's recorded parameter.
 
 ref: fda_watcher.py keeps no frequency state at all (the reference
 recomputes pandas value_counts per run) — this is the engine-native
@@ -44,19 +44,18 @@ upgrade the 100 TB path needs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.state import (
-    commit_version,
-    epoch_already_applied,
-    live_version_dir,
-    read_table,
-    write_table,
-    writer_lease,
+    StateFamily,
+    fold,
+    read_state,
+    stamp,
 )
+
+FREQ = StateFamily("freq-sketch state", tables=("items", "totals"),
+                   mismatch="summary-size mismatch")
 
 _CNT = "decimal(30,0)"
 
@@ -69,13 +68,10 @@ _ROWS_PER_STATE_PARTITION = 4_000_000
 
 def _derived_partitions(frame: DataFrame, override: int | None) -> int:
     """Partition count for a MATERIALIZED (localCheckpoint'd) frame:
-    override if given, else ceil(rows / _ROWS_PER_STATE_PARTITION). The
-    count is metadata-cheap on a checkpointed frame. This is the r5
-    advice fix: a static coalesce(1) silently funneled a
-    high-cardinality group key (per-domain instead of per-language
-    stats) through one task; deriving from the actual group-by size
-    keeps the single-file fast path for vocabulary-sized states and
-    fans out automatically past it."""
+    override if given, else ceil(rows / _ROWS_PER_STATE_PARTITION) — one
+    file for vocabulary-sized states, fanned out for a high-cardinality
+    group key instead of funneling it through one task. The count is
+    metadata-cheap on a checkpointed frame."""
     if override is not None:
         return override
     return max(1, -(-frame.count() // _ROWS_PER_STATE_PARTITION))
@@ -123,14 +119,10 @@ def _prune(items: DataFrame, keys: list[str], m: int):
     are per-GROUP (bounded at the merged summary size
     <= 2m + distinct(batch), never data-sized).
 
-    r10: the per-group subtraction rides a second window over the SAME
-    partition keys (unordered/unbounded, so it shares the row_number's
-    exchange) instead of the old d-frame left-join — one fewer join +
-    exchange pair per prune in a path that is pure tiny-stage scheduling
-    overhead at serve time. NULL group keys need no special casing here:
-    partitionBy groups NULLs together natively (the join formulation
-    needed <=> for the same guarantee). max() over the single rk==m+1
-    row IS that row's est — values bit-identical."""
+    The per-group subtraction rides a second window over the SAME
+    partition keys (it shares the row_number's exchange; no d-frame
+    join), and partitionBy groups NULL keys together natively. max()
+    over the single rk==m+1 row IS that row's est."""
     w = W.partitionBy(*keys).orderBy(F.col("est").desc(), F.col("item"))
     wg = W.partitionBy(*keys)
     ranked = items.withColumn("_rk", F.row_number().over(w)).withColumn(
@@ -154,6 +146,22 @@ def _prune(items: DataFrame, keys: list[str], m: int):
     return pruned, d
 
 
+def _add_prune_err(totals: DataFrame, d: DataFrame, keys: list[str]):
+    """(keys..., n_total, err) per group: the summed ``totals`` rows with
+    the prune's per-group subtraction ``_d`` added to err. One union-sum
+    groupBy instead of a null-safe d-join (r10): groupBy keeps NULL
+    group keys natively and decimal sums are exact, so the values are
+    bit-identical to the join formulation."""
+    return (
+        totals.select(*keys, "n_total", "err")
+        .unionByName(d.select(*keys, F.lit(0).cast(_CNT).alias("n_total"),
+                              F.col("_d").alias("err")))
+        .groupBy(*keys)
+        .agg(F.sum("n_total").cast(_CNT).alias("n_total"),
+             F.sum("err").cast(_CNT).alias("err"))
+    )
+
+
 def freq_partial(batch: DataFrame, keys: list[str], item_col: str,
                  m: int, partial_partitions: int | None = None):
     """(items, totals) summary of ONE batch: exact per-item counts pruned
@@ -166,12 +174,9 @@ def freq_partial(batch: DataFrame, keys: list[str], item_col: str,
     un-pruned counts, by construction). ``partial_partitions`` pins the
     post-count partitioning; default derives it from the counted size
     (see _derived_partitions)."""
-    # NULL group keys are a real group (r6): every keys-join in this
-    # module is NULL-safe (<=>, _join_null_safe), so the pruning offset
-    # and totals follow a NULL group exactly like any other — symmetric
-    # with merge_rollup/merge_hll, which keep NULL groups via groupBy.
-    # NULL ITEMS are still excluded (nothing to count), matching the
-    # hll-sketch's null-item filter.
+    # NULL group keys are a real group (every keys-join here is
+    # NULL-safe, as rollup/hll keep NULL groups via groupBy); NULL ITEMS
+    # are excluded (nothing to count), matching the hll-sketch.
     nn = batch.filter(F.col(item_col).isNotNull())
     counted = (
         nn.groupBy(*keys, F.col(item_col).alias("item"))
@@ -183,31 +188,10 @@ def freq_partial(batch: DataFrame, keys: list[str], item_col: str,
     # out instead of funneling
     counted = _sized(counted, _derived_partitions(counted, partial_partitions))
     items, d = _prune(counted, keys, m)
-    # totals via union-sum instead of a null-safe d-join (r10): the raw
-    # counts contribute (est, 0) and the <=1-per-group pruning row
-    # contributes (0, _d); one groupBy replaces the join+exchange pair.
-    # groupBy keeps NULL group keys natively; decimal sums are exact, so
-    # n_total = sum(est) and err = _d-or-0 are bit-identical to the
-    # join formulation.
-    totals = (
-        counted.select(
-            *keys,
-            F.col("est").alias("_nt"),
-            F.lit(0).cast(_CNT).alias("_er"),
-        )
-        .unionByName(
-            d.select(
-                *keys,
-                F.lit(0).cast(_CNT).alias("_nt"),
-                F.col("_d").alias("_er"),
-            )
-        )
-        .groupBy(*keys)
-        .agg(
-            F.sum("_nt").cast(_CNT).alias("n_total"),
-            F.sum("_er").cast(_CNT).alias("err"),
-        )
-    )
+    items = stamp(items, "est", {"m": m})
+    totals = _add_prune_err(
+        counted.select(*keys, F.col("est").alias("n_total"),
+                       F.lit(0).cast(_CNT).alias("err")), d, keys)
     return items, totals
 
 
@@ -216,116 +200,57 @@ def merge_freq(spark, batch: DataFrame, state_path: str, *,
                epoch: int | None = None,
                state_partitions: int | None = None,
                partial: tuple[DataFrame, DataFrame] | None = None) -> None:
-    """Fold one batch into the frequent-items state.
+    """Fold one batch into the frequent-items state (state.fold).
 
     Merge rule (mergeable-summaries MG): per-item ests ADD across the two
     summaries (outer-union + sum), then the merged list re-prunes to m.
     totals add exactly. Additive state: pass `epoch` (foreachBatch's
-    epoch_id) for exactly-once under replay (state.py::applied_epoch).
+    epoch_id) for exactly-once under replay. A state committed with
+    another m, or a partial stamped with one, raises.
 
     `state_partitions` sizes the state files. Default None DERIVES the
-    count from the merged summary's measured size (state is
-    O(|groups|·m) rows): the common vocabulary-sized state stays one
-    file, avoiding a shuffle-partition-count spray of tiny files re-read
-    every merge, while a high-cardinality group key (e.g. per-domain)
-    fans out automatically instead of funneling one task (r5 advice).
+    count from the merged summary's measured size: a vocabulary-sized
+    state stays one file, a high-cardinality group key (e.g. per-domain)
+    fans out instead of funneling one task (r5 advice).
 
-    `partial`, when given, is this batch's (items, totals) summary
-    already produced by `freq_partial(batch, keys, item_col, m, ...)`
-    with the SAME keys/item_col/m — a caller draining several pending
-    batches (backfill/catch-up) builds the per-batch partials
-    concurrently (operators/concurrency.run_all: each partial's
-    materialization job overlaps the others and the earlier merges'
-    fsync-bound commits) while the state folds stay strictly sequential.
-    The fold consumes exactly the frame the internal call would have
-    produced, in the same order — state bytes are bit-identical.
+    `partial`, when given, is this batch's (items, totals) summary from
+    `freq_partial(batch, keys, item_col, m, ...)` with the SAME
+    keys/item_col/m — a caller draining several pending batches builds
+    the partials concurrently (operators/concurrency.run_all) while the
+    folds stay sequential; the state bytes are those of the sequential
+    path.
     """
-    if epoch_already_applied(state_path, "freq-sketch state", epoch):
-        return  # replayed micro-batch: already folded in
-    b_items, b_totals = partial if partial is not None else freq_partial(
-        batch, keys, item_col, m, partial_partitions=state_partitions)
-    with writer_lease(state_path, what="freq-sketch state"):
-        # authoritative re-check INSIDE the lease (see rollup.py: the
-        # pre-lease check is a fast path; a concurrent holder may have
-        # committed this epoch while we computed the partial)
-        if epoch_already_applied(state_path, "freq-sketch state", epoch):
-            return
-        live = live_version_dir(state_path, what="freq-sketch state")
-        if live is not None:
-            o_items = read_table(spark, os.path.join(live, "items"))
-            o_totals = read_table(spark, os.path.join(live, "totals"))
+    def combine(old, b):
+        items, totals = b
+        if old is None:
+            # first init: one extra vocab-sized count (of the
+            # checkpointed partial) sizes the files
+            n_parts = _derived_partitions(items, state_partitions)
+        else:
             # materialize the summed union once (state-sized, tiny): the
-            # prune consumes it three times (ranked, d, totals-join) and
-            # would otherwise re-run the read+union+shuffle per consumer
+            # prune consumes it three times (ranked, d, totals) and would
+            # otherwise re-run the read+union+shuffle per consumer
             summed = (
-                o_items.unionByName(b_items)
+                old[0].unionByName(items)
                 .groupBy(*keys, "item")
                 .agg(F.sum("est").cast(_CNT).alias("est"))
                 .localCheckpoint(eager=True)
             )
             n_parts = _derived_partitions(summed, state_partitions)
-            summed = _sized(summed, n_parts)
-            items, d = _prune(summed, keys, m)
-            # same union-sum shape as freq_partial's totals (r10): old +
-            # batch totals rows and the <=1-per-group merge-prune row
-            # (0, _d) fold in one groupBy — no null-safe d-join. Exact
-            # decimal sums; bit-identical to the join formulation.
-            totals = (
-                o_totals.unionByName(b_totals)
-                .select(*keys, "n_total", "err")
-                .unionByName(
-                    d.select(
-                        *keys,
-                        F.lit(0).cast(_CNT).alias("n_total"),
-                        F.col("_d").alias("err"),
-                    )
-                )
-                .groupBy(*keys)
-                .agg(
-                    F.sum("n_total").cast(_CNT).alias("n_total"),
-                    F.sum("err").cast(_CNT).alias("err"),
-                )
-            )
-        else:
-            items, totals = b_items, b_totals
-            # first init only: one extra vocab-sized count to size the
-            # files (b_items derives from the checkpointed partial)
-            n_parts = (state_partitions if state_partitions is not None
-                       else max(1, -(-b_items.count()
-                                     // _ROWS_PER_STATE_PARTITION)))
+            items, d = _prune(_sized(summed, n_parts), keys, m)
+            totals = _add_prune_err(old[1].unionByName(totals), d, keys)
+        return {"items": (_sized(items, n_parts), None),
+                "totals": (_sized(totals, n_parts), None)}
 
-        def _write(vdir: str) -> None:
-            # the two state tables derive from the same checkpointed
-            # summed frame and write to disjoint paths — overlap the two
-            # KB-sized write jobs (guide §2.6); the version only becomes
-            # live at the MANIFEST flip after BOTH jobs return, so the
-            # commit atomicity contract is unchanged
-            from rag_pipelines_spark.operators.concurrency import run_all
-
-            run_all(
-                lambda: write_table(_sized(items, n_parts),
-                                    os.path.join(vdir, "items")),
-                lambda: write_table(_sized(totals, n_parts),
-                                    os.path.join(vdir, "totals")),
-            )
-
-        commit_version(
-            state_path,
-            _write,
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    fold(spark, FREQ, state_path, params={"m": m}, epoch=epoch,
+         partial=lambda: partial if partial is not None else freq_partial(
+             batch, keys, item_col, m, partial_partitions=state_partitions),
+         combine=combine)
 
 
 def read_freq(spark, state_path: str):
     """(items, totals) DataFrames of the live freq-sketch state."""
-    live = live_version_dir(state_path, what="freq-sketch state")
-    if live is None:
-        raise FileNotFoundError(f"no freq-sketch state at {state_path}")
-    return (
-        read_table(spark, os.path.join(live, "items")),
-        read_table(spark, os.path.join(live, "totals")),
-    )
+    return tuple(read_state(spark, FREQ, state_path))
 
 
 def freq_topk(spark, state_path: str, *, keys: list[str],

@@ -18,19 +18,12 @@ rows per partition at any corpus size — never data-sized).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from rag_pipelines_spark.operators.state import (
-    commit_version,
-    epoch_already_applied,
-    live_version_dir,
-    read_table,
-    write_table,
-    writer_lease,
-)
+from rag_pipelines_spark.operators.state import StateFamily, fold, read_state
+
+HISTOGRAM = StateFamily("histogram state", mismatch="bin-width mismatch")
 
 
 def histogram_partial(batch: DataFrame, keys: list[str], col: str,
@@ -52,41 +45,23 @@ def histogram_partial(batch: DataFrame, keys: list[str], col: str,
 def merge_histogram(spark, batch: DataFrame, state_path: str, *,
                     keys: list[str], col: str, width: float,
                     epoch: int | None = None) -> None:
-    """Fold one batch into histogram state (manifest scheme,
-    operators/state.py). counts add ⇒ N merges == one-shot, pinned by
-    test. Additive state: pass `epoch` for exactly-once under replay
-    (operators/state.py::applied_epoch)."""
-    if epoch_already_applied(state_path, "histogram state", epoch):
-        return  # replayed micro-batch: already folded in
-    partial = histogram_partial(batch, keys, col, width)
-    with writer_lease(state_path, what="histogram state"):
-        # authoritative re-check INSIDE the lease (see rollup.py: the
-        # pre-lease check is a fast path; a concurrent holder may have
-        # committed this epoch while we computed the partial)
-        if epoch_already_applied(state_path, "histogram state", epoch):
-            return
-        live = live_version_dir(state_path, what="histogram state")
-        if live is not None:
-            partial = (
-                read_table(spark, live)
-                .unionByName(partial)
-                .groupBy(*keys, "bin")
-                .agg(F.sum("n").alias("n"))
-            )
-        merged = partial
-        commit_version(
-            state_path,
-            lambda vdir: write_table(merged, vdir),
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    """Fold one batch into histogram state (state.fold). counts add ⇒ N
+    merges == one-shot, pinned by test; bins of different widths do not
+    add, so a state committed with another `width` raises. Additive
+    state: pass `epoch` for exactly-once under replay."""
+    def combine(old, p):
+        if old is not None:
+            p = (old[0].unionByName(p).groupBy(*keys, "bin")
+                 .agg(F.sum("n").alias("n")))
+        return {"": (p, None)}
+
+    fold(spark, HISTOGRAM, state_path, params={"width": width}, epoch=epoch,
+         partial=lambda: histogram_partial(batch, keys, col, width),
+         combine=combine)
 
 
 def read_histogram(spark, state_path: str) -> DataFrame:
-    live = live_version_dir(state_path, what="histogram state")
-    if live is None:
-        raise FileNotFoundError(f"no histogram state at {state_path}")
-    return read_table(spark, live)
+    return read_state(spark, HISTOGRAM, state_path)[0]
 
 
 def histogram_quantile(hist: DataFrame, keys: list[str], width: float,

@@ -8,8 +8,8 @@ Spark ships the sketch natively (`hll_sketch_agg` / `hll_union_agg` /
 no UDF): per-group state is ONE binary register array of
 2^lgConfigK * ~1 byte, so a 100 TB stream's per-key distinct-user counts
 live in a |groups|-row, KB-per-row state folded batch-by-batch — the
-same incremental-view-maintenance shape as merge_rollup, with the
-histogram/freqsketch modules' manifest + epoch + lease contract.
+same incremental-view-maintenance shape as merge_rollup, folded by
+operators/state.py::fold like every rewrite-style family.
 
 Merge-exactness: HLL union is a per-register MAX — commutative,
 associative, idempotent — so `union(partials) == sketch(union)` holds at
@@ -28,30 +28,30 @@ per run, full rescan) — engine-native upgrade for the 100 TB path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.state import (
-    commit_version,
-    epoch_already_applied,
-    live_version_dir,
-    read_table,
-    write_table,
-    writer_lease,
+    StateFamily,
+    fold,
+    read_state,
+    stamp,
 )
 
 DEFAULT_LGK = 12  # 4096 registers, ~2.5% standard error
 
+HLL = StateFamily("hll-sketch state", mismatch="lgConfigK mismatch")
+
 
 def hll_partial(batch: DataFrame, keys: list[str], item_col: str,
                 lgk: int = DEFAULT_LGK) -> DataFrame:
-    """One (keys..., sketch) row per group for a single batch."""
-    return (
+    """One (keys..., sketch) row per group for a single batch; the
+    sketch column carries its lgk as a stamp (state.stamp)."""
+    return stamp(
         batch.filter(F.col(item_col).isNotNull())
         .groupBy(*keys)
-        .agg(F.hll_sketch_agg(F.col(item_col), F.lit(lgk)).alias("sketch"))
+        .agg(F.hll_sketch_agg(F.col(item_col), F.lit(lgk)).alias("sketch")),
+        "sketch", {"lgk": lgk},
     )
 
 
@@ -60,72 +60,35 @@ def merge_hll(spark, batch: DataFrame, state_path: str, *,
               epoch: int | None = None,
               state_partitions: int = 1,
               partial: DataFrame | None = None) -> None:
-    """Fold one batch into the per-group HLL state.
+    """Fold one batch into the per-group HLL state (state.fold).
 
     union(state ∪ partial(batch)) at the register level; additive state,
     so pass `epoch` (foreachBatch's epoch_id) for exactly-once under
-    replay (operators/state.py::applied_epoch). All sketches in a state
-    dir share one lgk (hll_union_agg would raise on a mismatch — the
-    loud failure we want, not a silent precision downgrade).
+    replay. All sketches in a state dir share one lgk: a partial stamped
+    with another, or a state committed with another, raises before any
+    register is read.
 
-    `partial`, when given, is this batch's (keys..., sketch) frame from
-    `hll_partial(batch, keys, item_col, lgk)` with the SAME params — a
-    caller draining several pending batches materializes the per-batch
-    sketch partials concurrently (operators/concurrency.checkpoint_all)
-    while the register-union folds stay sequential. Register union is
-    per-slot MAX (associative/idempotent), so the state is identical.
+    `partial`, when given, is this batch's frame from
+    `hll_partial(batch, keys, item_col, lgk)` — a caller draining
+    several pending batches materializes the partials concurrently
+    (operators/concurrency.checkpoint_all) while the folds stay
+    sequential. Register union is per-slot MAX (associative,
+    idempotent), so the state is identical. One state file by default.
     """
-    if epoch_already_applied(state_path, "hll-sketch state", epoch):
-        return  # replayed micro-batch: already folded in
-    caller_partial = partial is not None
-    if partial is None:
-        partial = hll_partial(batch, keys, item_col, lgk)
-    with writer_lease(state_path, what="hll-sketch state"):
-        # authoritative re-check INSIDE the lease (see rollup.py: the
-        # pre-lease check is a fast path; a concurrent holder may have
-        # committed this epoch while we computed the partial)
-        if epoch_already_applied(state_path, "hll-sketch state", epoch):
-            return
-        live = live_version_dir(state_path, what="hll-sketch state")
-        if live is None and caller_partial:
-            # FIRST fold of a caller-built partial (r10 ADVICE): later
-            # merges fail loudly on an lgk mismatch inside hll_union_agg,
-            # but the first version would be written unchecked, silently
-            # rebasing the state's precision on the caller's error. Probe
-            # by unioning the partial's sketches with one declared-lgk
-            # sketch — hll_union_agg raises on differing lgConfigK
-            # (allowDifferentLgConfigK defaults to false). One tiny job
-            # over the |groups|-row frame, only on state creation.
-            probe = spark.range(1).agg(
-                F.hll_sketch_agg(F.col("id"), F.lit(lgk)).alias("sketch")
-            )
-            partial.select("sketch").unionByName(probe).agg(
-                F.hll_union_agg("sketch")
-            ).first()
-        if live is not None:
-            merged = (
-                read_table(spark, live)
-                .unionByName(partial)
-                .groupBy(*keys)
-                .agg(F.hll_union_agg(F.col("sketch")).alias("sketch"))
-            )
-        else:
-            merged = partial
-        # |groups|-row state: one file per merge by default (avoid a
-        # shuffle-partition-count spray of tiny files re-read every merge)
-        commit_version(
-            state_path,
-            lambda vdir: write_table(merged, vdir, state_partitions),
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    def combine(old, p):
+        if old is not None:
+            p = (old[0].unionByName(p).groupBy(*keys)
+                 .agg(F.hll_union_agg(F.col("sketch")).alias("sketch")))
+        return {"": (p, state_partitions)}
+
+    fold(spark, HLL, state_path, params={"lgk": lgk}, epoch=epoch,
+         partial=lambda: partial if partial is not None
+         else hll_partial(batch, keys, item_col, lgk),
+         combine=combine)
 
 
 def read_hll(spark, state_path: str) -> DataFrame:
-    live = live_version_dir(state_path, what="hll-sketch state")
-    if live is None:
-        raise FileNotFoundError(f"no hll-sketch state at {state_path}")
-    return read_table(spark, live)
+    return read_state(spark, HLL, state_path)[0]
 
 
 def hll_estimate(state: DataFrame, keys: list[str]) -> DataFrame:

@@ -45,7 +45,11 @@ from rag_pipelines_spark.operators.clustering import (
     seed_centroids,
 )
 from rag_pipelines_spark.operators.rollup import merge_rollup, read_rollup
-from rag_pipelines_spark.operators.state import live_version_dir
+from rag_pipelines_spark.operators.state import (
+    live_version_dir,
+    read_table,
+    write_table,
+)
 from rag_pipelines_spark.queries._util import dec_to_dbl
 
 __all__ = [
@@ -65,7 +69,7 @@ def _sums_path(state_path: str) -> str:
 
 
 def read_kmeans_seeds(spark, state_path: str) -> list[tuple[int, list[float]]]:
-    rows = spark.read.parquet(_seeds_dir(state_path)).collect()
+    rows = read_table(spark, _seeds_dir(state_path)).collect()
     return sorted((int(r["cluster"]), list(r["cen"])) for r in rows)
 
 
@@ -95,10 +99,10 @@ def merge_kmeans_state(
         seeds = seed_centroids(emb, k, id_col, vec_col)
         # seeds BEFORE the first merge commit: deterministic rewrite on
         # replay (annstate discipline)
-        spark.createDataFrame(
+        write_table(spark.createDataFrame(
             [(c, v) for c, v in seeds],
             "cluster int, cen array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(_seeds_dir(state_path))
+        ), _seeds_dir(state_path), 1)
     else:
         seeds = read_kmeans_seeds(spark, state_path)
     # literal-expression assignment for small k (zero shuffle); the

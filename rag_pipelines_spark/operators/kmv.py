@@ -36,6 +36,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rag_pipelines_spark.operators.state import (
+    StateFamily,
+    fold,
+    in_band_params,
+    read_state,
+)
+
 __all__ = [
     "kmv_sketch",
     "kmv_estimate",
@@ -147,67 +154,35 @@ def kmv_intersect(
 
 
 # ---------------------------------------------------------------------------
-# Incremental state (7th family): manifest/epoch/lease contract, same as
-# rollup / histogram / freq / hll — accrete batches, never re-scan history.
-# KMV union is idempotent and associative (k smallest of a union of
-# k-smallest sets == k smallest of the union), so accretion == one-shot
-# EXACTLY, merge-tree-invariant at the ARRAY level (asserted in tests).
+# Incremental state (7th family), folded by operators/state.py::fold —
+# accrete batches, never re-scan history. KMV union is idempotent and
+# associative (k smallest of a union of k-smallest sets == k smallest of
+# the union), so accretion == one-shot EXACTLY, merge-tree-invariant at
+# the ARRAY level (asserted in tests).
 # ---------------------------------------------------------------------------
+
+
+# k also travels in-band (the `k` column): a k mismatch would silently
+# corrupt the size<k exact/estimate branch (the full-sketch test reads
+# array length against the CALLER's k), so it is refused loudly
+KMV = StateFamily("kmv-sketch state", mismatch="k mismatch",
+                  legacy_params=in_band_params("k"))
 
 
 def merge_kmv(spark, batch: DataFrame, state_path: str, *,
               keys: list[str], item_col: str, k: int = 256,
               epoch: int | None = None,
               state_partitions: int = 1) -> None:
-    """Fold one batch into the per-group KMV state (see merge_hll for the
-    lease/epoch choreography this mirrors)."""
-    from rag_pipelines_spark.operators.state import (
-        commit_version,
-        epoch_already_applied,
-        live_version_dir,
-        read_table,
-        write_table,
-        writer_lease,
-    )
-    import os
+    """Fold one batch into the per-group KMV state (state.fold)."""
+    def combine(old, p):
+        if old is not None:
+            p = kmv_merge(old[0].drop("k"), p, keys, k)
+        return {"": (p.withColumn("k", F.lit(k)), state_partitions)}
 
-    if epoch_already_applied(state_path, "kmv-sketch state", epoch):
-        return  # replayed micro-batch: already folded in
-    partial = kmv_sketch(batch, keys, item_col, k)
-    with writer_lease(state_path, what="kmv-sketch state"):
-        # authoritative re-check inside the lease (fast path above may
-        # have raced a concurrent holder committing this epoch)
-        if epoch_already_applied(state_path, "kmv-sketch state", epoch):
-            return
-        live = live_version_dir(state_path, what="kmv-sketch state")
-        if live is not None:
-            state = read_table(spark, live)
-            # k travels in-band: a k mismatch would silently corrupt the
-            # size<k exact/estimate branch (the full-sketch test reads
-            # array length against the CALLER's k) — refuse loudly, the
-            # same posture as hll_union_agg's lgk mismatch
-            row = state.select("k").first()
-            if row is not None and row.k != k:
-                raise ValueError(
-                    f"kmv state at {state_path} was built with k={row.k}; "
-                    f"refusing to merge with k={k}"
-                )
-            merged = kmv_merge(state.drop("k"), partial, keys, k)
-        else:
-            merged = partial
-        commit_version(
-            state_path,
-            lambda vdir: write_table(
-                merged.withColumn("k", F.lit(k)), vdir, state_partitions),
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    fold(spark, KMV, state_path, params={"k": k}, epoch=epoch,
+         partial=lambda: kmv_sketch(batch, keys, item_col, k),
+         combine=combine)
 
 
 def read_kmv(spark, state_path: str) -> DataFrame:
-    from rag_pipelines_spark.operators.state import live_version_dir, read_table
-
-    live = live_version_dir(state_path, what="kmv-sketch state")
-    if live is None:
-        raise FileNotFoundError(f"no kmv-sketch state at {state_path}")
-    return read_table(spark, live)
+    return read_state(spark, KMV, state_path)[0]

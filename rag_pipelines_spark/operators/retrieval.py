@@ -40,6 +40,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from rag_pipelines_spark.operators.state import StateFamily, fold, read_state
 from rag_pipelines_spark.queries._util import dec_to_dbl
 
 # BM25 constants (Robertson k1/b defaults). Derived literals are
@@ -259,30 +260,22 @@ def batch_corpus_stats(docs: DataFrame, *, text_col: str = "text"):
     return terms, totals
 
 
+CORPUS_STATS = StateFamily("corpus-stats state", tables=("terms", "totals"))
+
+
 def corpus_stats(spark, state_path: str):
     """(terms, totals) DataFrames of the live corpus-stats state."""
-    import os
-
-    from rag_pipelines_spark.operators.state import live_version_dir, read_table
-
-    live = live_version_dir(state_path, what="corpus-stats state")
-    if live is None:
-        raise FileNotFoundError(f"no corpus-stats state at {state_path}")
-    return (
-        read_table(spark, os.path.join(live, "terms")),
-        read_table(spark, os.path.join(live, "totals")),
-    )
+    return tuple(read_state(spark, CORPUS_STATS, state_path))
 
 
 def merge_corpus_stats(spark, batch: DataFrame, state_path: str, *,
                        text_col: str = "text", epoch: int | None = None) -> None:
     """Accrete BM25 corpus statistics with a new document batch.
 
-    merged dfreq = old + batch per term (full-outer sum); totals add.
-    The merged state is written to a NEW version dir (terms/ + totals/),
-    the MANIFEST flips atomically, superseded versions are GC'd — the
-    crash-safety contract of operators/state.py, shared with the near-dup
-    state. Identity pinned by test: N merges == one batch over the union.
+    merged dfreq = old + batch per term (full-outer sum); totals add;
+    state.fold writes both tables to a new version dir and flips the
+    MANIFEST. Identity pinned by test: N merges == one batch over the
+    union.
 
     Single-writer like the reference's singleton watcher cron. The stats
     are additive COUNTS, so a replayed batch would double-count — pass
@@ -290,63 +283,20 @@ def merge_corpus_stats(spark, batch: DataFrame, state_path: str, *,
     a replay of an already-applied epoch is skipped (exactly-once state
     under Structured Streaming's at-least-once replays).
     """
-    import os
+    def combine(old, b):
+        terms, totals = b
+        if old is not None:
+            terms = (old[0].unionByName(terms).groupBy("term")
+                     .agg(F.sum("dfreq").alias("dfreq")))
+            totals = old[1].unionByName(totals).agg(
+                F.sum("n_docs").alias("n_docs"),
+                F.sum("sum_dl").alias("sum_dl"))
+        return {"terms": (terms, None), "totals": (totals, None)}
 
-    from rag_pipelines_spark.operators.state import (
-        commit_version,
-        epoch_already_applied,
-        live_version_dir,
-        read_table,
-        write_table,
-        writer_lease,
-    )
-
-    if epoch_already_applied(state_path, "corpus-stats state", epoch):
-        return  # replayed micro-batch: already folded in
-
-    b_terms, b_totals = batch_corpus_stats(batch, text_col=text_col)
-    with writer_lease(state_path, what="corpus-stats state"):
-        # authoritative re-check INSIDE the lease (see rollup.py: the
-        # pre-lease check is a fast path; a concurrent holder may have
-        # committed this epoch while we computed the partial)
-        if epoch_already_applied(state_path, "corpus-stats state", epoch):
-            return
-        live = live_version_dir(state_path, what="corpus-stats state")
-        if live is not None:
-            o_terms = read_table(spark, os.path.join(live, "terms"))
-            o_totals = read_table(spark, os.path.join(live, "totals"))
-            terms = (
-                o_terms.unionByName(b_terms)
-                .groupBy("term")
-                .agg(F.sum("dfreq").alias("dfreq"))
-            )
-            totals = (
-                o_totals.unionByName(b_totals)
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("sum_dl").alias("sum_dl"),
-                )
-            )
-        else:
-            terms, totals = b_terms, b_totals
-
-        def _write(vdir: str) -> None:
-            # two independent write jobs to disjoint paths inside the
-            # uncommitted version dir — overlap them (guide §2.6); the
-            # MANIFEST flip after both return stays the commit point
-            from rag_pipelines_spark.operators.concurrency import run_all
-
-            run_all(
-                lambda: write_table(terms, os.path.join(vdir, "terms")),
-                lambda: write_table(totals, os.path.join(vdir, "totals")),
-            )
-
-        commit_version(
-            state_path,
-            _write,
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    # no parameter shapes this state: whitespace tokens, one row per term
+    fold(spark, CORPUS_STATS, state_path, params={}, epoch=epoch,
+         partial=lambda: batch_corpus_stats(batch, text_col=text_col),
+         combine=combine)
 
 
 def assemble_context(ranked: DataFrame, *, snippet_col: str = "snippet",

@@ -35,14 +35,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.state import (
+    StateFamily,
     applied_epoch,
     commit_version,
-    epoch_already_applied,
+    fold,
+    live_params,
     live_version_dir,
+    read_state,
     read_table,
+    write_params,
     write_table,
     writer_lease,
 )
+
+ROLLUP = StateFamily("rollup state", mismatch="keys/measures mismatch")
 
 # measure -> (batch partial, state combine). Each entry emits columns
 # named <agg>_<col>; the combine re-aggregates those names.
@@ -104,47 +110,28 @@ def rollup_batch(batch: DataFrame, keys: list[str],
 def merge_rollup(spark, batch: DataFrame, state_path: str, *,
                  keys: list[str], measures: dict[str, list[str]],
                  epoch: int | None = None) -> None:
-    """Fold one batch into the keyed rollup state.
+    """Fold one batch into the keyed rollup state (state.fold).
 
     combine(state ∪ partial(batch)) == partial(history ∪ batch) — pinned
-    by test (N merges == one-shot groupBy over the union). Additive
-    state: pass `epoch` (foreachBatch's epoch_id) to make replays of an
-    already-applied micro-batch a no-op (exactly-once, see
-    operators/state.py::applied_epoch).
+    by test (N merges == one-shot groupBy over the union). A state
+    committed with other `keys`/`measures` raises. Additive state: pass
+    `epoch` (foreachBatch's epoch_id) to make replays of an
+    already-applied micro-batch a no-op (exactly-once).
     """
-    if epoch_already_applied(state_path, "rollup state", epoch):
-        return  # replayed micro-batch: already folded in
-    partial = rollup_batch(batch, keys, measures)
-    with writer_lease(state_path, what="rollup state"):
-        # authoritative re-check INSIDE the lease: the pre-lease check is a
-        # fast path only — a writer that held the lease while we computed
-        # the partial may have committed this very epoch (zombie-driver
-        # replay); without this, the additive merge double-counts
-        if epoch_already_applied(state_path, "rollup state", epoch):
-            return
-        live = live_version_dir(state_path, what="rollup state")
-        if live is not None:
-            merged = (
-                read_table(spark, live)
-                .unionByName(partial)
-                .groupBy(*keys)
-                .agg(*_combine_aggs(measures))
-            )
-        else:
-            merged = partial
-        commit_version(
-            state_path,
-            lambda vdir: write_table(merged, vdir),
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    def combine(old, p):
+        if old is not None:
+            p = (old[0].unionByName(p).groupBy(*keys)
+                 .agg(*_combine_aggs(measures)))
+        return {"": (p, None)}
+
+    fold(spark, ROLLUP, state_path,
+         params={"keys": list(keys), "measures": measures}, epoch=epoch,
+         partial=lambda: rollup_batch(batch, keys, measures),
+         combine=combine)
 
 
 def read_rollup(spark, state_path: str) -> DataFrame:
-    live = live_version_dir(state_path, what="rollup state")
-    if live is None:
-        raise FileNotFoundError(f"no rollup state at {state_path}")
-    return read_table(spark, live)
+    return read_state(spark, ROLLUP, state_path)[0]
 
 
 def compact_rollup_state(
@@ -209,10 +196,13 @@ def compact_rollup_state(
         # epoch carried forward BEFORE the flip (applied_epoch resolves the
         # manifest, which still names the old live inside this lease)
         epoch = applied_epoch(state_path, what="rollup state")
-        commit_version(
-            state_path,
-            lambda vdir: write_table(compacted, vdir),
-            epoch=epoch,
-            prev=os.path.basename(live),
-        )
+        params = live_params(spark, ROLLUP, live)
+
+        def _write(vdir: str) -> None:
+            write_table(compacted, vdir)
+            if params is not None:
+                write_params(vdir, params, spark)
+
+        commit_version(state_path, _write, epoch=epoch,
+                       prev=os.path.basename(live))
     return n_before, n_after

@@ -10,6 +10,9 @@ Layout: ``<state_path>/MANIFEST`` (one line naming the live prefix) plus
                        items/ + totals/, each laid out the same way)
       _schema.json     the table's Spark schema, recorded by write_table
                        so read_table skips parquet schema inference
+      _params.json     the state's parameters (count-min geometry, hll
+                       lgk, kmv k, ...), recorded by fold at commit so a
+                       mismatched merge is refused without a Spark job
       _epoch           applied micro-batch epoch (write_epoch)
       _prev            superseded version's name (write_prev)
 
@@ -39,6 +42,16 @@ tests/test_incremental_neardup.py and tests/test_continuous_ingest.py,
 and re-run through the Hadoop (``file://``) backend in
 tests/test_statefs.py.
 
+The rewrite-style families (rollup, histogram, freq, count-min, hll,
+kmv, bloom, corpus stats) are each an associative, commutative merge
+of a batch partial into the live tables (Summingbird's monoid). `fold`
+is the one runtime that applies them: epoch fast path, partial built
+outside the lease, `writer_lease`, epoch re-check, `live_version_dir`,
+parameter check against ``_params.json`` (and against the stamp a
+partial builder put on its payload column), the family's ``combine``,
+`write_table` of each table, `commit_version`. A family is a
+`StateFamily` spec plus its combine; `read_state` serves its tables.
+
 Single-writer by design: the reference's watcher is a singleton cron
 (fda_watcher.py scheduling), so batches and compactions are serialized —
 and since round 5 the assumption is ENFORCED, not assumed: every mutating
@@ -49,11 +62,14 @@ manifest flips.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
 
 from contextlib import contextmanager
+from dataclasses import dataclass
+from typing import Callable
 
 from rag_pipelines_spark.operators.statefs import backend_for
 
@@ -277,9 +293,8 @@ def applied_epoch(state_path: str, what: str = "state") -> int | None:
 
 def epoch_already_applied(state_path: str, what: str,
                           epoch: int | None) -> bool:
-    """Shared epoch guard for every rewrite-style merge (rollup,
-    histogram, corpus-stats, freq-sketch, hll-sketch): True when this
-    exact epoch is already folded into the live version (replayed
+    """Shared epoch guard of every rewrite-style merge (`fold`): True
+    when this exact epoch is already folded into the live version (replayed
     micro-batch — caller returns without touching state); raises when
     the state has applied a LATER epoch (the stream checkpoint was reset
     against existing state — epoch counters restart per checkpoint, and
@@ -344,8 +359,6 @@ def read_table(spark, path: str):
     (one job and ~0.1 s per table, the dominant cost of a KB-sized
     serve read). Versions committed before schemas were recorded have no
     ``_schema.json`` and fall back to inference."""
-    import json
-
     from pyspark.sql.types import StructType
 
     try:
@@ -354,6 +367,141 @@ def read_table(spark, path: str):
     except FileNotFoundError:
         return spark.read.parquet(path)
     return spark.read.schema(StructType.fromJson(json.loads(recorded))).parquet(path)
+
+
+PARAMS_FILE = "_params.json"
+STAMP = "state_params"  # column-metadata key of a partial's parameters
+
+
+@dataclass(frozen=True)
+class StateFamily:
+    """What one rewrite-style state family tells `fold` and `read_state`.
+
+    ``tables`` are the table dirs of a version dir ("" = the version dir
+    itself). ``mismatch`` names a parameter mismatch in error text.
+    ``legacy_params(spark, live)`` returns the parameters of a version
+    committed before ``_params.json`` existed (None: not checked until
+    that state's next commit records them)."""
+
+    what: str
+    tables: tuple[str, ...] = ("",)
+    mismatch: str = "parameter mismatch"
+    legacy_params: Callable | None = None
+
+
+def stamp(df, col: str, params: dict):
+    """``df`` with ``params`` stamped on column ``col``'s metadata, so a
+    caller-built partial carries its own parameters to `fold`, which
+    reads them from ``df.schema`` (no job). The stamp survives
+    localCheckpoint; fold strips it before writing."""
+    return df.withMetadata(col, {STAMP: params})
+
+
+def live_params(spark, family: StateFamily, live: str) -> dict | None:
+    """Parameters the live version was committed with: a text read of
+    its ``_params.json``, else the family's legacy hook."""
+    try:
+        return json.loads(backend_for(live, spark).read_text(
+            os.path.join(live, PARAMS_FILE)))
+    except FileNotFoundError:
+        return family.legacy_params and family.legacy_params(spark, live)
+
+
+def in_band_params(*cols: str) -> Callable:
+    """legacy_params hook of a family whose tables also carry their
+    parameters as constant columns (one job; None for an empty table)."""
+    def read(spark, live: str) -> dict | None:
+        row = read_table(spark, live).select(*cols).first()
+        return None if row is None else row.asDict()
+    return read
+
+
+def write_params(vdir: str, params: dict, spark=None) -> None:
+    backend_for(vdir, spark).publish_text(
+        vdir, PARAMS_FILE, json.dumps(params, sort_keys=True))
+
+
+def _fmt(params: dict) -> str:
+    return " ".join(f"{k}={v}" for k, v in params.items())
+
+
+def _refuse_mismatch(family, where: str, got: dict | None, want: dict):
+    if got is not None and got != want:
+        raise ValueError(
+            f"{family.what} {family.mismatch}: {where} was built with "
+            f"{_fmt(got)}; refusing to merge with {_fmt(want)}")
+
+
+def _table(vdir: str, table: str) -> str:
+    return os.path.join(vdir, table) if table else vdir
+
+
+def fold(spark, family: StateFamily, state_path: str, *, params: dict,
+         partial: Callable, combine: Callable, epoch: int | None) -> None:
+    """Fold one batch into a rewrite-style state.
+
+    ``partial()`` builds the batch's partial outside the lease (the
+    batch-sized work); ``combine(old, partial)`` gets the live tables
+    (a list in ``family.tables`` order, None on the first fold) and
+    returns ``{table: (df, parts)}``. ``params`` (JSON values) are the
+    parameters whose mismatch corrupts the state: a partial stamped with
+    others, or a live version committed with others, raises ValueError
+    before any table is read. Pass ``epoch`` (foreachBatch's epoch_id)
+    for exactly-once state under replay (`epoch_already_applied`)."""
+    if epoch_already_applied(state_path, family.what, epoch):
+        return  # replayed micro-batch: already folded in
+    built = partial()
+    for df in built if isinstance(built, tuple) else (built,):
+        for f in df.schema.fields:
+            _refuse_mismatch(family, "partial", f.metadata.get(STAMP), params)
+    with writer_lease(state_path, what=family.what):
+        # authoritative re-check: a writer that held the lease while we
+        # built the partial may have committed this very epoch
+        if epoch_already_applied(state_path, family.what, epoch):
+            return
+        live = live_version_dir(state_path, what=family.what)
+        old = None
+        if live is not None:
+            _refuse_mismatch(family, f"state at {state_path}",
+                             live_params(spark, family, live), params)
+            old = [read_table(spark, _table(live, t)) for t in family.tables]
+        out = combine(old, built)
+
+        def _write(vdir: str) -> None:
+            from rag_pipelines_spark.operators.concurrency import run_all
+
+            # the tables go to disjoint paths: overlap their writes; the
+            # version becomes live only at the MANIFEST flip after all
+            # of them return
+            run_all(*[
+                (lambda df=df, t=t, n=n:
+                 write_table(_unstamped(df), _table(vdir, t), n))
+                for t, (df, n) in out.items()
+            ])
+            write_params(vdir, params, spark)  # after a root-table overwrite
+
+        commit_version(state_path, _write, epoch=epoch,
+                       prev=os.path.basename(live) if live else None)
+
+
+def _unstamped(df):
+    for f in df.schema.fields:
+        if STAMP in f.metadata:
+            df = df.withMetadata(
+                f.name, {k: v for k, v in f.metadata.items() if k != STAMP})
+    return df
+
+
+def read_state(spark, family: StateFamily, state_path: str, *,
+               with_params: bool = False):
+    """The live version's tables, one DataFrame per ``family.tables``
+    entry (plus its parameters with ``with_params``); FileNotFoundError
+    when no version has committed."""
+    live = live_version_dir(state_path, what=family.what)
+    if live is None:
+        raise FileNotFoundError(f"no {family.what} at {state_path}")
+    tables = [read_table(spark, _table(live, t)) for t in family.tables]
+    return (tables, live_params(spark, family, live)) if with_params else tables
 
 
 def gc_orphans(state_path: str) -> list[str]:

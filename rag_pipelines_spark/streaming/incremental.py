@@ -477,13 +477,15 @@ def continuous_ingest_pipeline(
                     read_bloom_words,
                 )
 
-                words = read_bloom_words(s, os.path.join(root, "bloomseen"))
+                bloom_path = os.path.join(root, "bloomseen")
+                words = read_bloom_words(s, bloom_path)
                 if words is not None:
                     # probe with the STATE's own (m_bits, k) — a caller-
                     # remembered value could diverge after a config change
                     # and produce false negatives (= silent duplicates);
-                    # merge_bloom separately refuses mismatched merges
-                    state_params = bloom_state_params(words)
+                    # merge_bloom separately refuses mismatched merges.
+                    # A text read of the recorded parameters, no job.
+                    state_params = bloom_state_params(bloom_path)
             if words is not None and state_params is not None:
                 # bloom front door: definitely-new rows skip the seen join;
                 # maybe-seen rows verify exactly. The bloom can only OVER-

@@ -242,3 +242,17 @@ def test_first_fold_lazy_partial_is_materialized_defensively(spark, tmp_path):
     merge_cm(spark, df, state2, keys=[], item_col="item",
              depth=4, width=64)
     assert a == read_cm(spark, state2)[0].orderBy("d", "bucket").collect()
+
+
+def test_first_fold_smaller_width_partial_refused(spark, tmp_path):
+    """A partial built with width=32 folded as width=64 has every bucket
+    below 64, so no bound on its rows can tell; the (depth, width) stamp
+    cm_partial puts on its counter column does, with no Spark job."""
+    df = _stream(spark)
+    narrow = cm_partial(df, ["grp"], "item", depth=4, width=32).localCheckpoint()
+    state = str(tmp_path / "cm_narrow")
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        merge_cm(spark, df, state, keys=["grp"], item_col="item",
+                 depth=4, width=64, partial=narrow)
+    with pytest.raises(FileNotFoundError):
+        read_cm(spark, state)  # nothing was committed

@@ -120,3 +120,17 @@ def test_null_values_excluded_from_quantiles(spark):
     e1 = histogram_quantile(h1, ["k"], 1.0, 0.5).collect()[0].q50
     e2 = histogram_quantile(h2, ["k"], 1.0, 0.5).collect()[0].q50
     assert e1 == e2 and e1 is not None
+
+
+def test_width_mismatch_refused(spark, tmp_path):
+    """Bins of different widths do not add: a merge with another width
+    raises, naming the stored and the requested width."""
+    import pytest
+
+    ev = spark.createDataFrame([("a", 1.5), ("a", 2.5)], "g string, v double")
+    state = str(tmp_path / "hist_width")
+    merge_histogram(spark, ev, state, keys=["g"], col="v", width=1.0)
+    with pytest.raises(ValueError, match=r"width=1\.0.*width=2\.0"):
+        merge_histogram(spark, ev, state, keys=["g"], col="v", width=2.0)
+    merge_histogram(spark, ev, state, keys=["g"], col="v", width=1.0)
+    assert sorted(r.n for r in read_histogram(spark, state).collect()) == [2, 2]

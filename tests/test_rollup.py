@@ -227,3 +227,21 @@ def test_state_schema_stable_across_merges(spark, tmp_path):
         schemas.append(dict(read_rollup(spark, state).dtypes))
     assert all(s["sum_value"] == "decimal(30,15)" for s in schemas), schemas
     assert schemas[0] == schemas[1] == schemas[2]
+
+
+def test_keys_or_measures_mismatch_refused(spark, tmp_path):
+    """A state keyed or measured differently cannot absorb the batch: the
+    merge raises, naming the stored and the requested keys/measures."""
+    ev = spark.createDataFrame(
+        [("a", "x", 1.0), ("b", "y", 2.0)], "g string, h string, v double")
+    state = str(tmp_path / "rollup_params")
+    merge_rollup(spark, ev, state, keys=["g"], measures={"v": ["count", "sum"]})
+    with pytest.raises(ValueError, match=r"keys=\['g'\].*keys=\['h'\]"):
+        merge_rollup(spark, ev, state, keys=["h"],
+                     measures={"v": ["count", "sum"]})
+    with pytest.raises(ValueError, match=r"\['count', 'sum'\].*\['count'\]"):
+        merge_rollup(spark, ev, state, keys=["g"], measures={"v": ["count"]})
+    merge_rollup(spark, ev, state, keys=["g"], measures={"v": ["count", "sum"]})
+    assert {(r.g, r.count_v, float(r.sum_v))
+            for r in read_rollup(spark, state).collect()} \
+        == {("a", 2, 2.0), ("b", 2, 4.0)}

@@ -6,6 +6,7 @@ recorded."""
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
@@ -14,16 +15,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators import (
+    annstate,
     bloomfilter,
     cmsketch,
     freqsketch,
     histogram,
     hllsketch,
+    kmeansstate,
     kmv,
     retrieval,
     rollup,
 )
 from rag_pipelines_spark.operators.state import (
+    PARAMS_FILE,
     SCHEMA_FILE,
     live_version_dir,
     read_table,
@@ -192,6 +196,11 @@ def test_compaction_records_schema(spark, tmp_path):
     assert os.path.isfile(os.path.join(live, SCHEMA_FILE))
     assert read_table(spark, live).schema == spark.read.parquet(live).schema
     assert _rows([rollup.read_rollup(spark, path)]) == before
+    # the parameters are carried forward: a mismatch is still refused
+    assert os.path.isfile(os.path.join(live, PARAMS_FILE))
+    with pytest.raises(ValueError, match="refusing to merge"):
+        rollup.merge_rollup(spark, _batch(spark, 2), path, keys=["g"],
+                            measures={"v": ["count"]})
 
 
 @pytest.mark.parametrize("family", ["hll", "freq"])
@@ -208,3 +217,93 @@ def test_schema_through_uri_backend(spark, tmp_path, family):
         assert read_table(spark, t).schema == spark.read.parquet(t).schema
     assert _jobs_while(spark, lambda: read(spark, path)) == 0
     assert read(spark, path)[0].select(F.count("*")).first()[0] > 0
+
+
+# family -> (merge with the recorded parameters, merge with others,
+#            the recorded parameters)
+LEGACY_PARAMS = {
+    "bloom": (
+        lambda s, b, p: bloomfilter.merge_bloom(
+            s, b, p, key="item", m_bits=1 << 10, k=3),
+        lambda s, b, p: bloomfilter.merge_bloom(
+            s, b, p, key="item", m_bits=1 << 10, k=4),
+        {"m_bits": 1 << 10, "k": 3},
+    ),
+    "kmv": (
+        lambda s, b, p: kmv.merge_kmv(s, b, p, keys=["g"], item_col="item", k=16),
+        lambda s, b, p: kmv.merge_kmv(s, b, p, keys=["g"], item_col="item", k=8),
+        {"k": 16},
+    ),
+    "countmin": (
+        lambda s, b, p: cmsketch.merge_cm(
+            s, b, p, keys=["g"], item_col="item", depth=2, width=64),
+        lambda s, b, p: cmsketch.merge_cm(
+            s, b, p, keys=["g"], item_col="item", depth=2, width=32),
+        {"depth": 2, "width": 64},
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(LEGACY_PARAMS))
+def test_state_without_recorded_params_still_refuses_mismatch(
+        spark, tmp_path, family):
+    """A version committed before parameters were recorded (no
+    _params.json) is checked through the family's legacy hook — the
+    in-band columns of kmv and bloom, count-min's meta.json — and the
+    next matching merge records _params.json."""
+    merge, other, params = LEGACY_PARAMS[family]
+    path = str(tmp_path / family)
+    merge(spark, _batch(spark, 0), path)
+    live = live_version_dir(path)
+    os.unlink(os.path.join(live, PARAMS_FILE))
+    if family == "countmin":  # such versions carried their geometry here
+        with open(os.path.join(live, "meta.json"), "w") as f:
+            json.dump(params, f)
+    if family == "bloom":
+        assert bloomfilter.bloom_state_params(path) == (1 << 10, 3)
+
+    with pytest.raises(ValueError, match="refusing to merge"):
+        other(spark, _batch(spark, 1), path)
+    assert live_version_dir(path) == live
+    merge(spark, _batch(spark, 1), path)
+    with open(os.path.join(live_version_dir(path), PARAMS_FILE)) as f:
+        assert json.load(f) == params
+
+
+def _emb(spark, b: int):
+    rows = [(b * 100 + i, [float((i * 3 + b) % 5), float(i % 4), 1.0])
+            for i in range(12)]
+    return spark.createDataFrame(rows, "rid long, emb array<double>")
+
+
+# write-once seed tables: merge(spark, batch, path, epoch), served seeds
+SEEDED = {
+    "kmeans": (
+        lambda s, b, p, e: kmeansstate.merge_kmeans_state(
+            s, b, p, "rid", "emb", k=3, d=3, epoch=e),
+        lambda s, p: kmeansstate.read_kmeans_seeds(s, p),
+    ),
+    "ann": (
+        lambda s, b, p, e: annstate.merge_ann_index(
+            s, b, p, "rid", "emb", k_seeds=4, epoch=e),
+        lambda s, p: sorted(map(tuple, annstate._read_seeds(s, p).collect())),
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(SEEDED))
+def test_seed_table_schema_recorded(spark, tmp_path, family):
+    merge, read = SEEDED[family]
+    path = str(tmp_path / family)
+    merge(spark, _emb(spark, 0), path, 0)
+    seeds = os.path.join(path, "seeds")
+    assert os.path.isfile(os.path.join(seeds, SCHEMA_FILE))
+    assert read_table(spark, seeds).schema == spark.read.parquet(seeds).schema
+    before = read(spark, path)
+    assert len(before) > 0
+    # a seeds dir written before schemas were recorded still reads and
+    # still serves the next merge
+    os.unlink(os.path.join(seeds, SCHEMA_FILE))
+    assert read(spark, path) == before
+    merge(spark, _emb(spark, 1), path, 1)
+    assert read(spark, path) == before

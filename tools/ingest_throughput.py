@@ -225,7 +225,7 @@ def run(spark, sf_dir: str, batch_sizes: list[int]) -> list[dict]:
         srec["kmv_s"] = round(time.time() - t0, 2)
         t0 = time.time()
         words = read_bloom_words(spark, os.path.join(root, "bloom"))
-        m_bits, k_h = bloom_state_params(words)
+        m_bits, k_h = bloom_state_params(os.path.join(root, "bloom"))
         bloom_probe(probe, words, "doc_id", m_bits, k_h).filter(
             F.col("_bfmaybe")
         ).count()
